@@ -47,10 +47,9 @@ def test_token_hashes_offsets_matches_string_fold():
 
 
 def test_token_hashes_offsets_non_ascii_vectorized_fold(spark):
-    """The vectorized UTF-16 fallback must reproduce Spark's own
-    split('')/ascii fold for CJK, combining-mark, and non-BMP (surrogate
-    pair) tokens — Java chars are UTF-16 units, so an emoji folds as TWO
-    units."""
+    """The non-ASCII fallback must reproduce Spark's own split('')/ascii
+    fold for CJK, combining-mark, and non-BMP tokens — the fold is per
+    codepoint, so an emoji folds as ONE codepoint (ascii('🚀') = 128640)."""
     from valor_spark.operators.dedup import token_hash
 
     toks = [
@@ -122,13 +121,18 @@ def test_knn_bucket_kernel_matches_hof_path(spark):
     import valor_spark.operators.similarity as SIM
 
     rng = np.random.default_rng(7)
-    rows = [
+    dense = [
         (i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(120)
     ] + [(900, [0.0] * 16)]  # zero vector exercises the den==0 guard
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    new = SIM.knn_graph(emb, k=3, n_planes=4, n_tables=2, dim=16)
-    ref = SIM.knn_graph(emb, k=3, n_planes=4, n_tables=2, dim=None)
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, ref.collect()))
+    # few vectors over many planes: most buckets hold <= k+1 members
+    sparse = [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(40)]
+    for rows, n_planes in ((dense, 4), (sparse, 6)):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        new = SIM.knn_graph(emb, k=3, n_planes=n_planes, n_tables=2, dim=16)
+        ref = SIM.knn_graph(emb, k=3, n_planes=n_planes, n_tables=2, dim=None)
+        got = sorted(map(tuple, new.collect()))
+        assert got == sorted(map(tuple, ref.collect())), n_planes
+        assert all(r[0] != r[1] for r in got), n_planes
 
 
 def test_spread_width_caps_and_floors(spark):

@@ -31,9 +31,11 @@ Scale notes (100 TB of audio):
 
 from __future__ import annotations
 
+import hashlib
 import io
 import struct
 import wave
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -140,10 +142,15 @@ def _wav_nonpcm_fallback(
 
 
 def decode_one(
-    raw: bytes | None, codec: str | None
+    raw: bytes | np.ndarray | None, codec: str | None
 ) -> tuple[np.ndarray | None, int | None, str | None]:
     """Decode one payload to int16 PCM; returns (samples, header_rate, error).
-    ``header_rate`` is the container's sample rate (WAV) or None for raw PCM."""
+    ``header_rate`` is the container's sample rate (WAV) or None for raw PCM.
+
+    ``raw`` is ``bytes`` or the zero-copy ``np.uint8`` view
+    :func:`_binary_views` returns: raw PCM and G.711 decode as views over
+    it, and only the container codecs (WAV, FLAC), whose parsers slice and
+    compare ``bytes``, copy it first."""
     if raw is None:
         return None, None, "null_bytes"
     try:
@@ -152,6 +159,7 @@ def decode_one(
                 return None, None, "odd_byte_length"
             return np.frombuffer(raw, dtype="<i2"), None, None
         if codec == "wav":
+            raw = bytes(raw)
             try:
                 with wave.open(io.BytesIO(raw), "rb") as w:
                     if w.getsampwidth() != 2 or w.getnchannels() != 1:
@@ -169,7 +177,7 @@ def decode_one(
         if codec == "flac":
             from valor_spark.operators.flac import decode_flac_mono
 
-            return decode_flac_mono(raw)
+            return decode_flac_mono(bytes(raw))
         return None, None, f"unsupported_codec:{codec}"
     except Exception as exc:  # malformed container
         return None, None, f"decode_failed:{type(exc).__name__}"
@@ -215,6 +223,62 @@ def _binary_views(col):
         return data[offs[i] : offs[i + 1]]
 
     return get
+
+
+def map_clips(
+    sel: DataFrame,
+    kernel: Callable[[np.ndarray, int], tuple],
+    fields: str,
+    err_row: tuple,
+) -> DataFrame:
+    """The one-row-per-clip audio operator: ONE shuffle-free
+    ``mapInArrow`` pass over ``sel = (clip_id, bytes, codec, sr_hz,
+    *carried)``.
+
+    Every payload goes through :func:`decode_one` as a zero-copy view over
+    the Arrow buffers.  A decoded clip's row is ``kernel(sig, sr)``, with a
+    NULL ``sr_hz`` read as 0; a clip that fails to decode gets ``err_row``.
+    ``fields`` is the DDL of those columns (``"n_samples int, sum_sq
+    bigint, ..."``; types int, bigint or string), and both the Spark schema
+    and the Arrow batch are built from it.  Output: ``clip_id``, the
+    carried columns unchanged, the kernel's columns, ``decode_error``."""
+    carried = sel.schema.fields[4:]
+    kernel_cols = [f.split() for f in fields.split(",")]
+    out_schema = ", ".join(
+        ["clip_id string"]
+        + [f"{f.name} {f.dataType.simpleString()}" for f in carried]
+        + [fields, "decode_error string"]
+    )
+    names = (
+        ["clip_id"]
+        + [f.name for f in carried]
+        + [name for name, _ in kernel_cols]
+        + ["decode_error"]
+    )
+
+    def gen(batches):
+        import pyarrow as pa
+
+        arrow = {"int": pa.int32(), "bigint": pa.int64(), "string": pa.string()}
+        types = [arrow[t] for _, t in kernel_cols]
+        for b in batches:
+            get_bytes = _binary_views(b.column(1))
+            codecs = b.column(2).to_pylist()
+            rates = b.column(3).to_pylist()
+            rows: list[tuple] = []
+            errors: list[str | None] = []
+            for i in range(b.num_rows):
+                sig, _rate, err = decode_one(get_bytes(i), codecs[i])
+                rows.append(err_row if err is not None else kernel(sig, rates[i] or 0))
+                errors.append(err)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), *b.columns[4:]]
+                + [pa.array([r[j] for r in rows], t) for j, t in enumerate(types)]
+                + [pa.array(errors, pa.string())],
+                names=names,
+            )
+
+    return sel.mapInArrow(gen, out_schema)
 
 
 def with_audio_invariant(
@@ -277,22 +341,10 @@ def with_audio_invariant(
             errors: list[str | None] = [None] * n
             header_rates: list[int | None] = [None] * n
             for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
+                sig, header_rates[i], err = decode_one(get_bytes(i), codecs[i])
+                if err is not None:
+                    errors[i] = err
                     continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, rate, err = decode_one(rw.tobytes(), cod)
-                    header_rates[i] = rate
-                    if err is not None:
-                        errors[i] = err
-                        continue
                 rr = get_ref(i)
                 if rr is None:
                     errors[i] = "missing_reference"
@@ -426,86 +478,16 @@ def audio_profile(clips: DataFrame, silence_threshold: int = 512) -> DataFrame:
     output KB-scale per million clips.  Tune
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` for ~64-128 MB batches.
     """
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = (
-        "clip_id string, n_samples int, peak_abs int, sum_sq bigint, "
-        "n_clipped int, n_silent int, lead_silence int, trail_silence int, "
-        "decode_error string"
-    )
+    # profiling reads no rate: a literal fills the harness's rate column
+    sel = clips.select("clip_id", "bytes", "codec", F.lit(0).alias("sr_hz"))
     thr = int(silence_threshold)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            peak = np.zeros(n, np.int32)
-            sumsq = np.zeros(n, np.int64)
-            clipped = np.zeros(n, np.int32)
-            silent = np.zeros(n, np.int32)
-            lead = np.zeros(n, np.int32)
-            trail = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                m = len(sig)
-                n_samples[i] = m
-                if m == 0:
-                    continue
-                a = np.abs(sig.astype(np.int32))
-                peak[i] = int(a.max())
-                s64 = sig.astype(np.int64)
-                sumsq[i] = int(np.dot(s64, s64))
-                clipped[i] = int((a >= 32767).sum())
-                loud = np.nonzero(a >= thr)[0]
-                silent[i] = m - len(loud)
-                lead[i] = int(loud[0]) if len(loud) else m
-                trail[i] = int(m - 1 - loud[-1]) if len(loud) else m
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)]
-                + [
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(peak, pa.int32()),
-                    pa.array(sumsq, pa.int64()),
-                    pa.array(clipped, pa.int32()),
-                    pa.array(silent, pa.int32()),
-                    pa.array(lead, pa.int32()),
-                    pa.array(trail, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [b.schema.field(0)]
-                    + [
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("peak_abs", pa.int32()),
-                        pa.field("sum_sq", pa.int64()),
-                        pa.field("n_clipped", pa.int32()),
-                        pa.field("n_silent", pa.int32()),
-                        pa.field("lead_silence", pa.int32()),
-                        pa.field("trail_silence", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_clips(
+        sel,
+        lambda sig, sr: profile_ints(sig, thr),
+        "n_samples int, peak_abs int, sum_sq bigint, n_clipped int, "
+        "n_silent int, lead_silence int, trail_silence int",
+        (0, 0, 0, 0, 0, 0, 0),
+    )
 
 
 def audio_profile_derived(prof: DataFrame) -> DataFrame:
@@ -651,74 +633,13 @@ def audio_spectrum(clips: DataFrame) -> DataFrame:
     narrow columnar scan, zero-copy payload views, integer outputs (floats
     never cross the Arrow boundary).  FFT cost is O(m log m) per clip
     inside the batch loop — compute-bound, embarrassingly parallel."""
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, dom_bin int, dom_hz int, "
-        "second_bin int, impurity_milli int, decode_error string"
+    return map_clips(
+        clips.select("clip_id", "bytes", "codec", "sr_hz"),
+        spectral_ints,
+        "n_samples int, dom_bin int, dom_hz int, second_bin int, "
+        "impurity_milli int",
+        (0, 0, 0, 0, 0),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            dom_bin = np.zeros(n, np.int32)
-            dom_hz = np.zeros(n, np.int32)
-            second_bin = np.zeros(n, np.int32)
-            impurity = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    dom_bin[i],
-                    dom_hz[i],
-                    second_bin[i],
-                    impurity[i],
-                ) = spectral_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(dom_bin, pa.int32()),
-                    pa.array(dom_hz, pa.int32()),
-                    pa.array(second_bin, pa.int32()),
-                    pa.array(impurity, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [
-                        b.schema.field(0),
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("dom_bin", pa.int32()),
-                        pa.field("dom_hz", pa.int32()),
-                        pa.field("second_bin", pa.int32()),
-                        pa.field("impurity_milli", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def audio_segments(
@@ -761,18 +682,9 @@ def audio_segments(
             out_lo: list[int] = []
             out_hi: list[int] = []
             for i in range(b.num_rows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
+                sig, _rate, err = decode_one(get_bytes(i), codecs[i])
+                if err is not None:
                     continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        continue
                 a = np.abs(sig.astype(np.int32))
                 idx = np.nonzero(a >= thr)[0]
                 if idx.size == 0:
@@ -820,46 +732,15 @@ def audio_content_hash(clips: DataFrame) -> DataFrame:
     Undecodable payloads carry a NULL hash plus the decode error.  Same
     scale shape as :func:`audio_profile`: zero shuffle, zero-copy views,
     output is (id, 32-hex, error) — KB-scale per million clips."""
-    sel = clips.select("clip_id", "bytes", "codec")
-    out_schema = "clip_id string, content_hash string, decode_error string"
-
-    def gen(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            hashes: list[str | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                hashes[i] = hashlib.md5(np.ascontiguousarray(sig, "<i2").tobytes()).hexdigest()
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(hashes, pa.string()), pa.array(errors, pa.string())],
-                schema=pa.schema(
-                    [b.schema.field(0), pa.field("content_hash", pa.string()),
-                     pa.field("decode_error", pa.string())]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    # hashing reads no rate: a literal fills the harness's rate column
+    return map_clips(
+        clips.select("clip_id", "bytes", "codec", F.lit(0).alias("sr_hz")),
+        lambda sig, sr: (
+            hashlib.md5(np.ascontiguousarray(sig, "<i2").tobytes()).hexdigest(),
+        ),
+        "content_hash string",
+        (None,),
+    )
 
 
 def audio_dedup_groups(clips: DataFrame) -> DataFrame:

@@ -32,7 +32,9 @@ This module closes that gap with the classic landmark constellation:
 (clip_a, clip_b, dt); the frequency cap bounds per-key join fan-out to
 ``max_fp_freq**2`` regardless of corpus size; no all-pairs stage
 anywhere.  The decode+FFT pass is ONE mapInArrow over the pruned
-payload projection, embarrassingly parallel.
+payload projection, embarrassingly parallel; it decodes with
+``decode_one`` (operators/audio.py) but keeps its own loop rather than
+``map_clips`` because one clip emits many landmark rows.
 
 Reference parity note: the reference engine (mastarija/valor,
 lib/Data/Valor.hs) has no audio layer; this is part of the graft's
@@ -142,20 +144,10 @@ def audio_fingerprints(clips: DataFrame) -> DataFrame:
             counts: list[int] = []
             id_col = b.column(0).to_pylist()
             for i in range(b.num_rows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
+                sig, _rate, err = decode_one(get_bytes(i), codecs[i])
+                if err is not None:
                     continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _r, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                h, t = fingerprint_ints(sig, sr)
+                h, t = fingerprint_ints(sig, rates[i] or 0)
                 if h.size:
                     ids.append(id_col[i])
                     hs.append(h)

@@ -23,9 +23,10 @@ A "claims 48 kHz, contains 8 kHz" plant shows up as
 plain Column predicate over these ints (see the bandwidth entry in the
 gate and tests).
 
-Scale shape: ONE shuffle-free ``mapInArrow`` pass over the pruned
-``(clip_id, bytes, codec, sr_hz)`` projection, batched rFFT per clip,
-integer outputs from a fixed float64 op order (canonicalizer-safe).
+Scale shape: ONE shuffle-free pass of the one-row-per-clip harness
+(operators/audio.py::map_clips, decoding with ``decode_one``) over the
+pruned ``(clip_id, bytes, codec, sr_hz)`` projection, batched rFFT per
+clip, integer outputs from a fixed float64 op order (canonicalizer-safe).
 
 Reference parity note: the reference engine (mastarija/valor,
 lib/Data/Valor.hs) has no audio layer; this extends the graft's payload
@@ -36,6 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: Welch geometry — seconds, so Hz resolution is rate-independent
 FRAME_S = 0.064
@@ -85,75 +87,20 @@ def bandwidth_ints(
 def audio_bandwidth(clips: DataFrame) -> DataFrame:
     """Per-clip effective-bandwidth table ``(clip_id, src_sr, n_samples,
     rolloff95_hz, rolloff99_hz, hf_permille, decode_error)`` in ONE
-    mapInArrow pass over the pruned payload projection — inherits every
+    ``map_clips`` pass over the pruned payload projection — inherits every
     ``decode_one`` codec.  ``src_sr`` (the container's claimed rate) is
     carried through so downstream provenance rules can compare content
     bandwidth against the claimed Nyquist without a join back to the
     clips table."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import map_clips
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, src_sr int, n_samples int, rolloff95_hz int, "
-        "rolloff99_hz int, hf_permille int, decode_error string"
+    sel = clips.select(
+        "clip_id", "bytes", "codec", "sr_hz",
+        F.coalesce("sr_hz", F.lit(0)).alias("src_sr"),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            r95: list[int | None] = [None] * n
-            r99: list[int | None] = [None] * n
-            hf: list[int | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                n_samples[i], r95[i], r99[i], hf[i] = bandwidth_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(
-                        np.asarray(
-                            [r if r is not None else 0 for r in rates],
-                            np.int32,
-                        ),
-                        pa.int32(),
-                    ),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(r95, pa.int32()),
-                    pa.array(r99, pa.int32()),
-                    pa.array(hf, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "src_sr",
-                    "n_samples",
-                    "rolloff95_hz",
-                    "rolloff99_hz",
-                    "hf_permille",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return map_clips(
+        sel,
+        bandwidth_ints,
+        "n_samples int, rolloff95_hz int, rolloff99_hz int, hf_permille int",
+        (0, None, None, None),
+    )

@@ -216,7 +216,7 @@ def _token_hashes_offsets(col):
     if used.size and int(used.max()) >= 128:
         # token-level fallback: the byte fold above is only wrong for the
         # tokens that actually contain non-ASCII bytes — re-fold just
-        # those per UTF-16 unit (Spark's split/ascii semantics)
+        # those per codepoint (Spark's split/ascii semantics)
         import pyarrow as pa
 
         # clip guards a (theoretical) trailing zero-length token, same as

@@ -17,9 +17,9 @@ spectral or loudness pass reports directly:
   miscalibrated ADC / bad filter chain shifts the waveform off zero,
   wasting headroom and biasing downstream feature extraction.
 
-All-integer outputs from fixed-order numpy (canonicalizer-safe), ONE
-shuffle-free ``mapInArrow`` pass over the pruned payload projection,
-every ``decode_one`` codec inherited.
+All-integer outputs from fixed-order numpy (canonicalizer-safe); the
+pass itself is the one-row-per-clip harness (operators/audio.py::
+map_clips), so every ``decode_one`` codec and error is inherited.
 
 Reference parity note: the reference engine (mastarija/valor,
 lib/Data/Valor.hs) has no audio layer; this extends the graft's payload
@@ -70,77 +70,13 @@ def defect_ints(
 def audio_defects(clips: DataFrame) -> DataFrame:
     """Per-clip defect table ``(clip_id, n_samples, clipped_samples,
     max_clip_run, max_zero_run, max_zero_run_ms, dc_offset_permille,
-    decode_error)`` in ONE mapInArrow pass."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    decode_error)`` in ONE ``map_clips`` pass."""
+    from valor_spark.operators.audio import map_clips
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, clipped_samples int, "
-        "max_clip_run int, max_zero_run int, max_zero_run_ms int, "
-        "dc_offset_permille int, decode_error string"
+    return map_clips(
+        clips.select("clip_id", "bytes", "codec", "sr_hz"),
+        defect_ints,
+        "n_samples int, clipped_samples int, max_clip_run int, "
+        "max_zero_run int, max_zero_run_ms int, dc_offset_permille int",
+        (0, 0, 0, 0, None, 0),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            clipped = np.zeros(n, np.int32)
-            clip_run = np.zeros(n, np.int32)
-            zero_run = np.zeros(n, np.int32)
-            zero_ms: list[int | None] = [None] * n
-            dc = np.zeros(n, np.int32)
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    clipped[i],
-                    clip_run[i],
-                    zero_run[i],
-                    zero_ms[i],
-                    dc[i],
-                ) = defect_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(clipped, pa.int32()),
-                    pa.array(clip_run, pa.int32()),
-                    pa.array(zero_run, pa.int32()),
-                    pa.array(zero_ms, pa.int32()),
-                    pa.array(dc, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                names=[
-                    "clip_id",
-                    "n_samples",
-                    "clipped_samples",
-                    "max_clip_run",
-                    "max_zero_run",
-                    "max_zero_run_ms",
-                    "dc_offset_permille",
-                    "decode_error",
-                ],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

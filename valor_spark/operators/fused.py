@@ -8,9 +8,10 @@ read and decode the payload independently.  A corpus intake job wants
 ALL of them; running them separately multiplies the scan+decode cost by
 five.  This operator calls the SAME per-family integer kernels
 (profile_ints, spectral_ints, loudness_ints, bandwidth_ints,
-defect_ints) on one decoded signal inside one ``mapInArrow`` generator:
-one columnar scan of (clip_id, bytes, codec, sr_hz), one decode per
-clip, zero shuffle, 24 integer/error columns out.
+defect_ints) on one decoded signal through the one-row-per-clip harness
+(operators/audio.py::map_clips, which decodes with ``decode_one``): one
+columnar scan of (clip_id, bytes, codec, sr_hz), one decode per clip,
+zero shuffle, 24 integer/error columns out.
 
 The per-family kernels remain the single source of truth — this module
 contains NO metric arithmetic of its own, so the fused row is equal by
@@ -27,11 +28,12 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-#: fused output schema — family order: identity, profile, spectrum,
-#: loudness, bandwidth, defects, error
-FUSED_SCHEMA = (
-    "clip_id string, src_sr int, n_samples int, "
+#: the fused metric columns after clip_id and src_sr — family order:
+#: profile, spectrum, loudness, bandwidth, defects
+FUSED_FIELDS = (
+    "n_samples int, "
     "peak_abs int, sum_sq bigint, n_clipped int, n_silent int, "
     "lead_silence int, trail_silence int, "
     "dom_hz int, impurity_milli int, "
@@ -39,13 +41,13 @@ FUSED_SCHEMA = (
     "peak_milli_dbfs int, true_peak_milli_dbtp int, "
     "rolloff95_hz int, rolloff99_hz int, hf_permille int, "
     "max_clip_run int, max_zero_run int, max_zero_run_ms int, "
-    "dc_offset_permille int, decode_error string"
+    "dc_offset_permille int"
 )
 
 
 def fused_ints(sig: np.ndarray, sr: int) -> tuple:
     """All five families' integers for one decoded int16 signal, in
-    FUSED_SCHEMA order (minus clip_id/src_sr/decode_error)."""
+    FUSED_FIELDS order."""
     from valor_spark.operators.audio import profile_ints, spectral_ints
     from valor_spark.operators.bandwidth import bandwidth_ints
     from valor_spark.operators.defects import defect_ints
@@ -66,67 +68,21 @@ def fused_ints(sig: np.ndarray, sr: int) -> tuple:
 
 
 def audio_all_stats(clips: DataFrame) -> DataFrame:
-    """Per-clip FUSED metric table (see FUSED_SCHEMA) in ONE mapInArrow
-    pass: one scan, one decode, all families.  Error rows carry NULL for
-    every gated/NULLable metric and zero for the counters, matching each
-    family operator's own error contract."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    """Per-clip FUSED metric table ``(clip_id, src_sr, *FUSED_FIELDS,
+    decode_error)`` in ONE mapInArrow pass: one scan, one decode, all
+    families.  Error rows carry NULL for every gated/NULLable metric and
+    zero for the counters, matching each family operator's own error
+    contract."""
+    from valor_spark.operators.audio import map_clips
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    n_metrics = 21  # fused_ints arity
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            nrows = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            src_sr = np.asarray(
-                [r if r is not None else 0 for r in rates], np.int32
-            )
-            rows: list[tuple | None] = [None] * nrows
-            errors: list[str | None] = [None] * nrows
-            for i in range(nrows):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                rows[i] = fused_ints(np.asarray(sig), int(src_sr[i]))
-            err_row = (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, None, None, None,
-                       None, None, None, 0, 0, None, 0)
-            assert len(err_row) == n_metrics
-            cols = list(
-                zip(*(r if r is not None else err_row for r in rows))
-            )
-            types = [
-                pa.int32(), pa.int64(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(),
-                pa.int32(), pa.int32(), pa.int32(), pa.int32(),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(src_sr, pa.int32())]
-                + [
-                    pa.array(list(c), t)
-                    for c, t in zip(cols, [pa.int32()] + types)
-                ]
-                + [pa.array(errors, pa.string())],
-                names=[f.strip().split(" ")[0] for f in FUSED_SCHEMA.split(",")],
-            )
-
-    return sel.mapInArrow(gen, FUSED_SCHEMA)
+    sel = clips.select(
+        "clip_id", "bytes", "codec", "sr_hz",
+        F.coalesce("sr_hz", F.lit(0)).alias("src_sr"),
+    )
+    return map_clips(
+        sel,
+        fused_ints,
+        FUSED_FIELDS,
+        (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, None, None, None,
+         None, None, None, 0, 0, None, 0),
+    )

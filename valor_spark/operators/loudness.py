@@ -39,9 +39,10 @@ diagnostics (``n_blocks``, ``gated_blocks``), ``peak_milli_dbfs``
 48-tap windowed-sinc polyphase — catches overs the sample peak misses,
 e.g. a full-scale tone sampled off its crest).
 
-Scale shape: ONE ``mapInArrow`` pass over the pruned
-``(clip_id, bytes, codec, sr_hz)`` projection — no shuffle, zero-copy
-payload views, per-clip cost O(n log n) in the block FFTs,
+Scale shape: ONE pass of the one-row-per-clip harness
+(operators/audio.py::map_clips, decoding with ``decode_one``) over the
+pruned ``(clip_id, bytes, codec, sr_hz)`` projection — no shuffle,
+zero-copy payload views, per-clip cost O(n log n) in the block FFTs,
 embarrassingly parallel across executors.  The |H|^2 grid is cached per
 ``(block_len, sr)`` on each worker.
 
@@ -241,7 +242,7 @@ def loudness_ints(
 
 
 def audio_loudness(clips: DataFrame) -> DataFrame:
-    """Per-clip K-weighted gated loudness in ONE ``mapInArrow`` pass over
+    """Per-clip K-weighted gated loudness in ONE ``map_clips`` pass over
     the pruned ``(clip_id, bytes, codec, sr_hz)`` projection:
     ``(clip_id, n_samples, n_blocks, gated_blocks, lufs_milli,
     peak_milli_dbfs, decode_error)``.
@@ -251,78 +252,12 @@ def audio_loudness(clips: DataFrame) -> DataFrame:
     the spectrum pass cannot make: a clip whose waveform stats look
     healthy but that was mastered 20 LU hot (or whose speech sits under a
     gated-out noise floor) shows up directly in ``lufs_milli``."""
-    from valor_spark.operators.audio import _binary_views, decode_one
+    from valor_spark.operators.audio import map_clips
 
-    sel = clips.select("clip_id", "bytes", "codec", "sr_hz")
-    out_schema = (
-        "clip_id string, n_samples int, n_blocks int, gated_blocks int, "
-        "lufs_milli int, peak_milli_dbfs int, true_peak_milli_dbtp int, "
-        "decode_error string"
+    return map_clips(
+        clips.select("clip_id", "bytes", "codec", "sr_hz"),
+        loudness_ints,
+        "n_samples int, n_blocks int, gated_blocks int, lufs_milli int, "
+        "peak_milli_dbfs int, true_peak_milli_dbtp int",
+        (0, 0, 0, None, None, None),
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            get_bytes = _binary_views(b.column(1))
-            codecs = b.column(2).to_pylist()
-            rates = b.column(3).to_pylist()
-            n_samples = np.zeros(n, np.int32)
-            n_blocks = np.zeros(n, np.int32)
-            gated = np.zeros(n, np.int32)
-            lufs: list[int | None] = [None] * n
-            peak: list[int | None] = [None] * n
-            tpeak: list[int | None] = [None] * n
-            errors: list[str | None] = [None] * n
-            for i in range(n):
-                rw = get_bytes(i)
-                cod = codecs[i]
-                if rw is None:
-                    errors[i] = "null_bytes"
-                    continue
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
-                sr = rates[i] if rates[i] is not None else 0
-                (
-                    n_samples[i],
-                    n_blocks[i],
-                    gated[i],
-                    lufs[i],
-                    peak[i],
-                    tpeak[i],
-                ) = loudness_ints(sig, sr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(n_samples, pa.int32()),
-                    pa.array(n_blocks, pa.int32()),
-                    pa.array(gated, pa.int32()),
-                    pa.array(lufs, pa.int32()),
-                    pa.array(peak, pa.int32()),
-                    pa.array(tpeak, pa.int32()),
-                    pa.array(errors, pa.string()),
-                ],
-                schema=pa.schema(
-                    [
-                        b.schema.field(0),
-                        pa.field("n_samples", pa.int32()),
-                        pa.field("n_blocks", pa.int32()),
-                        pa.field("gated_blocks", pa.int32()),
-                        pa.field("lufs_milli", pa.int32()),
-                        pa.field("peak_milli_dbfs", pa.int32()),
-                        pa.field("true_peak_milli_dbtp", pa.int32()),
-                        pa.field("decode_error", pa.string()),
-                    ]
-                ),
-            )
-
-    return sel.mapInArrow(gen, out_schema)

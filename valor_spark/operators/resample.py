@@ -15,7 +15,9 @@ clip, never per-sample Python).  ``D`` centers the linear-phase filter so
 the output aligns with the input timeline (no leading group-delay shift).
 
 Spark surface: one shuffle-free ``mapInArrow`` pass over the pruned
-payload projection, inheriting every ``decode_one`` codec; integer
+payload projection, decoding with ``decode_one`` (operators/audio.py);
+it keeps its own loop rather than ``map_clips`` because a NULL or
+non-positive rate is reported (``bad_rate``) before any decode; integer
 outputs only (the resampled PCM itself stays executor-side — a 100 TB
 re-rate job would write it straight back out per partition, which is
 ``audio_resample_stats``'s write-path twin).
@@ -146,7 +148,7 @@ def audio_resample_stats(clips: DataFrame, target_sr: int = 16000) -> DataFrame:
             errors: list[str | None] = [None] * nrows
             for i in range(nrows):
                 rw = get_bytes(i)
-                sr = rates[i] if rates[i] is not None else 0
+                sr = rates[i] or 0
                 src_sr[i] = sr
                 if rw is None:
                     errors[i] = "null_bytes"
@@ -154,19 +156,12 @@ def audio_resample_stats(clips: DataFrame, target_sr: int = 16000) -> DataFrame:
                 if sr <= 0:
                     errors[i] = "bad_rate"
                     continue
-                cod = codecs[i]
-                if cod == "pcm_s16le":
-                    if len(rw) % 2:
-                        errors[i] = "odd_byte_length"
-                        continue
-                    sig = rw.view("<i2")
-                else:
-                    sig, _rate, err = decode_one(rw.tobytes(), cod)
-                    if err is not None:
-                        errors[i] = err
-                        continue
+                sig, _rate, err = decode_one(rw, codecs[i])
+                if err is not None:
+                    errors[i] = err
+                    continue
                 n_in[i] = len(sig)
-                out = resample_poly(np.asarray(sig), sr, target_sr)
+                out = resample_poly(sig, sr, target_sr)
                 n_out[i] = len(out)
                 dom_hz[i] = spectral_ints(out, target_sr)[2]
             yield pa.RecordBatch.from_arrays(

@@ -491,7 +491,10 @@ def _bucket_topk_cosine_arrow(dim: int, k: int, id_arrow_type,
                     # margin
                     part = np.partition(S, b - k, axis=1)[:, b - k]
                     thresh = part - margin
-                keep_r, keep_c = np.nonzero(S >= thresh[:, None])
+                keep = S >= thresh[:, None]
+                # a -inf threshold (b <= k+1) would keep the -inf diagonal
+                np.fill_diagonal(keep, False)
+                keep_r, keep_c = np.nonzero(keep)
                 if len(keep_r) == 0:
                     continue
                 gids = ids_all.slice(lo, b)

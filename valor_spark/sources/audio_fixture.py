@@ -1288,7 +1288,7 @@ def build_audio_fused_fixture(fixture_dir: str) -> dict[str, str]:
     import pyarrow.parquet as pq
 
     from valor_spark.operators.audio import decode_one
-    from valor_spark.operators.fused import FUSED_SCHEMA, fused_ints
+    from valor_spark.operators.fused import FUSED_FIELDS, fused_ints
 
     tag = _fixture_tag()
     paths = {
@@ -1299,17 +1299,12 @@ def build_audio_fused_fixture(fixture_dir: str) -> dict[str, str]:
         return paths
     os.makedirs(fixture_dir, exist_ok=True)
 
-    import numpy as np
-
     err_row = (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, None, None, None,
                None, None, None, 0, 0, None, 0)
     data_rows, expected_rows = [], []
     for cid, raw, sr, codec in _fused_clip_set():
         data_rows.append((cid, raw, sr, codec))
-        if codec == "pcm_s16le":
-            sig, err = np.frombuffer(raw, "<i2"), None
-        else:
-            sig, _r, err = decode_one(raw, codec)
+        sig, _r, err = decode_one(raw, codec)
         if err is not None:
             expected_rows.append((cid, sr, *err_row, err))
         else:
@@ -1326,9 +1321,13 @@ def build_audio_fused_fixture(fixture_dir: str) -> dict[str, str]:
         ),
         paths["data"],
     )
-    names = [f.strip().split(" ")[0] for f in FUSED_SCHEMA.split(",")]
+    fields = [
+        f.split()
+        for f in ["clip_id string", "src_sr int", *FUSED_FIELDS.split(","), "decode_error string"]
+    ]
     typemap = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64()}
-    types = [typemap[f.strip().split(" ")[1]] for f in FUSED_SCHEMA.split(",")]
+    names = [name for name, _ in fields]
+    types = [typemap[t] for _, t in fields]
     cols = list(zip(*expected_rows))
     pq.write_table(
         pa.table(

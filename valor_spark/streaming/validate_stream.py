@@ -363,7 +363,12 @@ def streaming_near_dup(
     fingerprints) means all-time fingerprint cardinality grows without
     bound at ingest scale, so the dedup window must size the state store.
     Pass ``ttl_ms=None`` to opt in to unbounded all-time state
-    explicitly."""
+    explicitly.
+
+    ``fp`` is an int64: the first 8 bytes of the k-gram md5.  Earlier
+    releases keyed the state by a 16-hex string, and that state is not
+    compatible with the int64 key, so a query upgraded from them needs a
+    fresh checkpoint location."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from valor_spark.operators.text import _winnow_arrow, tokens
